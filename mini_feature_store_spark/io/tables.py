@@ -12,7 +12,14 @@ queries snapshots — time travel here is a genuine capability add, SURVEY.md
 
 Scale notes:
 - The commit is one driver-side JSON rename — O(1) regardless of data size.
-- Old versions are immutable → safe concurrent readers; ``vacuum()`` prunes.
+- Every version is a self-contained directory; readers never stitch deltas.
+  A same-schema append writes only the new rows and hard-links every file of
+  the previous version into the new one (the local-FS analog of a snapshot
+  pointing at unchanged data files), so the daily append costs one day, not
+  the table. Each append adds that day's files to the latest version;
+  ``compact()`` is the remedy once small files pile up.
+- Old versions are immutable → safe concurrent readers; ``vacuum()`` prunes
+  (a hard-linked file lives on while any kept version still names it).
 - Partition columns are preserved per version, so partition pruning works on
   every version.
 """
@@ -21,6 +28,8 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 import time
 from collections.abc import Sequence
 from dataclasses import dataclass
@@ -61,6 +70,38 @@ def _escape_partition_value(v) -> str:
     )
 
 
+def _unescape_partition_value(name: str) -> str | None:
+    """The partition value behind directory-entry suffix ``name``: the
+    inverse of ``_escape_partition_value`` (Spark's unescapePathName), with
+    the default-partition name mapped to None."""
+    if name == _DEFAULT_PARTITION_NAME:
+        return None
+    return re.sub(
+        r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), name
+    )
+
+
+def _link_tree(src: str, dst: str) -> None:
+    """Hard-link every file under ``src`` into the same relative path under
+    ``dst``: same bytes, new namespace entry. Where linking fails
+    (cross-device etc.) the file is copied — slower, still correct. Spark's
+    job markers (``_SUCCESS`` and its checksum) stay behind: the
+    destination's own write has them."""
+    for root, _, names in os.walk(src):
+        out = os.path.join(dst, os.path.relpath(root, src))
+        os.makedirs(out, exist_ok=True)
+        for n in names:
+            if n.startswith(("_", "._")):
+                continue
+            a, b = os.path.join(root, n), os.path.join(out, n)
+            try:
+                os.link(a, b)
+            except FileExistsError:
+                raise  # a clobbered data file would lose rows
+            except OSError:
+                shutil.copy2(a, b)
+
+
 #: Spark SQL type names whose partition-directory encoding
 #: ``_escape_partition_value`` replicates exactly.
 _LINKABLE_PARTITION_TYPES = {
@@ -90,9 +131,57 @@ class VersionedTable:
         except FileNotFoundError:
             return {"versions": []}
 
+    def _version_dir(self, version: int) -> str:
+        return os.path.join(self.path, f"v={version}")
+
+    def _next_version(self, manifest: dict) -> int:
+        """One above every committed version AND every ``v=N`` directory on
+        disk: a write that died after Spark created its directory but
+        before the manifest commit leaves an orphan that must not be
+        reused (Spark would refuse to write into it, for good)."""
+        on_disk = []
+        if os.path.isdir(self.path):
+            on_disk = [
+                int(m.group(1))
+                for n in os.listdir(self.path)
+                if (m := re.fullmatch(r"v=(\d+)", n))
+            ]
+        committed = [v["version"] for v in manifest["versions"]]
+        return max(committed + on_disk, default=-1) + 1
+
+    def _commit(self, manifest: dict) -> None:
+        """Atomically replace the manifest — the commit point of every
+        change to the table."""
+        tmp = self._manifest_path() + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(manifest, f)
+        os.replace(tmp, self._manifest_path())
+
     def versions(self) -> list[dict]:
-        """Commit log: [{version, timestamp, partition_by}]."""
+        """Commit log: [{version, timestamp, partition_by, columns}], where
+        ``columns`` lists the (name, type) pairs the version was written
+        with."""
         return self._load_manifest()["versions"]
+
+    def partition_values(self) -> list[str | None]:
+        """Values of the latest version's partition column, read from its
+        directory names — no Spark job. Escaped characters are decoded and
+        the null partition is None. Single-column partitioning only."""
+        commits = self.versions()
+        if not commits:
+            raise FileNotFoundError(f"no committed versions at {self.path}")
+        part_cols = commits[-1]["partition_by"]
+        if len(part_cols) != 1:
+            raise ValueError(
+                f"partition_values needs one partition column, got {part_cols}"
+            )
+        prefix = f"{part_cols[0]}="
+        vdir = self._version_dir(commits[-1]["version"])
+        return [
+            _unescape_partition_value(n[len(prefix):])
+            for n in sorted(os.listdir(vdir))
+            if n.startswith(prefix) and os.path.isdir(os.path.join(vdir, n))
+        ]
 
     def write(
         self,
@@ -103,36 +192,59 @@ class VersionedTable:
         """Write a new table version; returns the committed version number.
 
         ``mode='overwrite'`` snapshots the full dataframe as the next
-        version (the reference's INSERT OVERWRITE, ProdWriter.scala:57-70);
-        ``mode='append'`` snapshots previous-version-plus-new-rows, keeping
-        every version self-contained (reads never stitch deltas).
+        version (the reference's INSERT OVERWRITE, ProdWriter.scala:57-70).
+        ``mode='append'`` commits previous-version-plus-new-rows, and every
+        version stays self-contained (reads never stitch deltas):
+
+        - when the new rows carry the previous commit's ``{column: type}``
+          set and ``partition_by`` equals the previous commit's, only the
+          new rows are written (in the previous column order) and every
+          file of the previous version is hard-linked into the new one —
+          no data copy. Spark's part-file names are unique per write, so
+          appending to an existing partition stays a union;
+        - otherwise (schema evolution, a new partition spec) the previous
+          version is unioned by name with the new rows and rewritten.
         """
         manifest = self._load_manifest()
-        version = (
-            max((v["version"] for v in manifest["versions"]), default=-1) + 1
-        )
-        vdir = os.path.join(self.path, f"v={version}")
+        version = self._next_version(manifest)
+        vdir = self._version_dir(version)
+        link_from = None
         if mode == "append" and manifest["versions"]:
-            # Schema evolution, Delta-style: appends may add or omit
-            # columns; missing sides are null-padded. Feature tables grow
-            # features over time — rejecting that forces full rewrites.
-            prev = self.read(df.sparkSession)
-            df = prev.unionByName(df, allowMissingColumns=True)
+            last = manifest["versions"][-1]
+            # the columns recorded at commit time, so the common case
+            # needs no read of the previous version (a file listing and a
+            # schema-inference job); a version committed without them
+            # takes the rewrite once
+            prev_cols = [tuple(c) for c in last.get("columns", [])]
+            if (
+                set(df.dtypes) == set(prev_cols)
+                and list(partition_by) == last["partition_by"]
+            ):
+                df = df.select(*(c for c, _ in prev_cols))
+                link_from = self._version_dir(last["version"])
+            else:
+                # Schema evolution, Delta-style: appends may add or omit
+                # columns; missing sides are null-padded. Feature tables
+                # grow features over time — rejecting that forces full
+                # rewrites.
+                df = self.read(df.sparkSession).unionByName(
+                    df, allowMissingColumns=True
+                )
         writer = df.write.mode("errorifexists")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(vdir)
+        if link_from is not None:
+            _link_tree(link_from, vdir)
         manifest["versions"].append(
             {
                 "version": version,
                 "timestamp": time.time(),
                 "partition_by": list(partition_by),
+                "columns": df.dtypes,
             }
         )
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path())  # atomic commit point
+        self._commit(manifest)
         return version
 
     def read(
@@ -156,7 +268,7 @@ class VersionedTable:
             version = commits[-1]["version"]
         elif version not in {c["version"] for c in commits}:
             raise ValueError(f"version {version} not in commit log")
-        return spark.read.parquet(os.path.join(self.path, f"v={version}"))
+        return spark.read.parquet(self._version_dir(version))
 
     def upsert(
         self,
@@ -267,10 +379,7 @@ class VersionedTable:
             }
         manifest = self._load_manifest()
         manifest["versions"][-1]["stats"] = stats
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path())
+        self._commit(manifest)
         return stats
 
     def stats(self) -> dict | None:
@@ -305,8 +414,6 @@ class VersionedTable:
         linking a directory whose name we predicted wrong would both
         duplicate rewritten rows AND resurrect deleted ones.
         """
-        import shutil
-
         keys = list(keys)
         commits = self.versions()
         if not commits:
@@ -337,9 +444,9 @@ class VersionedTable:
         ]
 
         manifest = self._load_manifest()
-        version = max(v["version"] for v in manifest["versions"]) + 1
-        vdir = os.path.join(self.path, f"v={version}")
-        prev_dir = os.path.join(self.path, f"v={last['version']}")
+        version = self._next_version(manifest)
+        vdir = self._version_dir(version)
+        prev_dir = self._version_dir(last["version"])
 
         if affected:
             non_null = [v for v in affected if v is not None]
@@ -358,11 +465,11 @@ class VersionedTable:
             os.makedirs(vdir, exist_ok=True)
 
         # Hard-link every untouched partition dir from the previous
-        # version: same bytes, new namespace entry — the local-FS analog of
-        # a manifest pointing at unchanged data files. Directory names are
-        # derived with the SAME escaping Spark used to write them (type-
-        # gated above) — a name mismatch here would link a partition that
-        # was also rewritten, duplicating rows and resurrecting deletes.
+        # version — the local-FS analog of a manifest pointing at unchanged
+        # data files. Directory names are derived with the SAME escaping
+        # Spark used to write them (type-gated above) — a name mismatch
+        # here would link a partition that was also rewritten, duplicating
+        # rows and resurrecting deletes.
         affected_dirs = {
             f"{pcol}={_escape_partition_value(v)}" for v in affected
         }
@@ -374,25 +481,17 @@ class VersionedTable:
                 or entry in affected_dirs
             ):
                 continue
-            dst = os.path.join(vdir, entry)
-            os.makedirs(dst, exist_ok=True)
-            for f in os.listdir(src):
-                try:
-                    os.link(os.path.join(src, f), os.path.join(dst, f))
-                except OSError:  # cross-device etc. — copy, still correct
-                    shutil.copy2(os.path.join(src, f), os.path.join(dst, f))
+            _link_tree(src, os.path.join(vdir, entry))
 
         manifest["versions"].append(
             {
                 "version": version,
                 "timestamp": time.time(),
                 "partition_by": part_cols,
+                "columns": last.get("columns", []),
             }
         )
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path())  # atomic commit point
+        self._commit(manifest)
         return version, len(affected)
 
     def compact(self, target_partitions: int) -> int:
@@ -415,9 +514,10 @@ class VersionedTable:
         return self.write(df, partition_by=latest["partition_by"])
 
     def vacuum(self, keep_last: int = 2) -> list[int]:
-        """Drop all but the last ``keep_last`` versions; returns dropped ids."""
-        import shutil
+        """Drop all but the last ``keep_last`` versions; returns dropped ids.
 
+        Kept versions stay whole: a file an append hard-linked from a
+        dropped version keeps its data while a kept version links it."""
         if keep_last < 1:
             # keep_last=0 would make versions[-0:] keep everything while the
             # drop list also covers everything — manifest and disk diverge.
@@ -426,12 +526,7 @@ class VersionedTable:
         keep = manifest["versions"][-keep_last:]
         drop = manifest["versions"][:-keep_last]
         for c in drop:
-            shutil.rmtree(
-                os.path.join(self.path, f"v={c['version']}"), ignore_errors=True
-            )
+            shutil.rmtree(self._version_dir(c["version"]), ignore_errors=True)
         manifest["versions"] = keep
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path())
+        self._commit(manifest)
         return [c["version"] for c in drop]

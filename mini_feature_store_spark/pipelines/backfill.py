@@ -64,9 +64,12 @@ def run_backfill_incremental(
     already current, nothing written). The daily cron case — yesterday's
     run covered days 1..N, today extends to N+1 — recomputes one day, not
     the whole history; at 100 TB that is the difference between a 5-minute
-    and a multi-hour job. Days are discovered from the table itself (one
-    distinct-scan of the partition column, prunable), so crashed partial
-    runs self-heal on the next invocation.
+    and a multi-hour job. Days are discovered from the table itself, so
+    crashed partial runs self-heal on the next invocation: from the latest
+    version's ``day=`` directory names when it is partitioned by ``day``
+    (no Spark job — an already-current table starts none), else by one
+    distinct-scan of the column. The append that follows writes only the
+    new days and hard-links the rest (``VersionedTable.write``).
 
     The feature compute still sees the FULL events input (rolling windows
     need the 30-day lookback before the first missing day); only the
@@ -76,8 +79,15 @@ def run_backfill_incremental(
     import datetime as dt
 
     vt = VersionedTable(cfg.output_table)
+    commits = vt.versions()
     have: set[dt.date] = set()
-    if vt.versions():
+    if commits and commits[-1]["partition_by"] == ["day"]:
+        have = {
+            dt.date.fromisoformat(v)
+            for v in vt.partition_values()
+            if v is not None
+        }
+    elif commits:
         have = {
             r["day"]
             for r in vt.read(spark).select("day").distinct().collect()
@@ -86,7 +96,7 @@ def run_backfill_incremental(
     end = dt.date.fromisoformat(cfg.end_date)
     want = {start + dt.timedelta(days=i) for i in range((end - start).days + 1)}
     missing = sorted(want - have)
-    mode = "append" if vt.versions() else "overwrite"
+    mode = "append" if commits else "overwrite"
     if missing:
         events = read_parquet(spark, cfg.events_path)
         features = backfill_features_window_form(

@@ -119,6 +119,48 @@ class OnlineSyncConfig:
     features_bucketed_table: str | None = None
 
 
+def write_latest(
+    features: DataFrame,
+    kv_factory: Callable[[], object],
+    key_col: str,
+    order_col: str,
+    key_prefix: str,
+) -> int:
+    """Write the latest row per key of ``features`` into the online store
+    as typed JSON payloads, in ONE pass over the plan.
+
+    Each partition opens one client and hands its pairs to ``mset`` in
+    bulk. The pairs handed over are counted on the way in and summed by an
+    accumulator, so no second action (a ``count()`` would re-run the whole
+    plan) is needed and no client's ``mset`` return value is trusted.
+    Returns that sum: the number of keys written.
+    """
+    latest = latest_per_key(
+        features, keys=[key_col], order_cols=[order_col], strategy="max_by"
+    )
+    value_cols = [c for c in latest.columns if c != key_col]
+    payloads = latest.select(
+        F.concat(F.lit(key_prefix), F.col(key_col).cast("string")).alias("key"),
+        F.to_json(F.struct(key_col, *value_cols)).alias("payload"),
+    )
+    written = features.sparkSession.sparkContext.accumulator(0)
+
+    def write_partition(rows):
+        n = 0
+
+        def pairs():
+            nonlocal n
+            for r in rows:
+                n += 1
+                yield r["key"], r["payload"]
+
+        kv_factory().mset(pairs())
+        written.add(n)
+
+    payloads.foreachPartition(write_partition)
+    return written.value
+
+
 def run_online_sync(
     spark: SparkSession,
     cfg: OnlineSyncConfig,
@@ -126,8 +168,9 @@ def run_online_sync(
 ) -> int:
     """Sync the latest feature snapshot per key into the online store.
 
-    Returns the number of keys written (via a distributed count, not a
-    driver materialization of payloads).
+    Returns the number of keys written, counted inside the write pass
+    (``write_latest``) — one Spark action, no driver materialization of
+    payloads.
     """
     if cfg.features_bucketed_table is not None:
         features = spark.table(cfg.features_bucketed_table)
@@ -139,22 +182,6 @@ def run_online_sync(
             (F.col(cfg.order_col) <= cutoff)
             & (F.col(cfg.order_col) >= F.date_sub(cutoff, cfg.lookback_days))
         )
-    latest = latest_per_key(
-        features, keys=[cfg.key_col], order_cols=[cfg.order_col], strategy="max_by"
+    return write_latest(
+        features, kv_factory, cfg.key_col, cfg.order_col, cfg.key_prefix
     )
-    value_cols = [c for c in latest.columns if c != cfg.key_col]
-    payloads = latest.select(
-        F.concat(
-            F.lit(cfg.key_prefix), F.col(cfg.key_col).cast("string")
-        ).alias("key"),
-        F.to_json(F.struct(cfg.key_col, *value_cols)).alias("payload"),
-    )
-
-    prefix_rows = payloads.select("key", "payload")
-
-    def write_partition(rows):
-        client = kv_factory()
-        client.mset((r["key"], r["payload"]) for r in rows)
-
-    prefix_rows.foreachPartition(write_partition)
-    return latest.count()

@@ -270,28 +270,16 @@ def stream_online_sync(
 ):
     """Continuously upsert the latest window per key into the online store.
 
-    ``foreachBatch`` routes each micro-batch through the *batch* sync path
-    (latest_per_key + partition-parallel KV writes) — the streaming analog
-    of OnlineSyncPipeline, with the driver-collect anti-pattern already
-    fixed in the shared code.
+    ``foreachBatch`` routes each micro-batch through the *batch* sync
+    writer (``pipelines.online_sync.write_latest``: latest_per_key +
+    partition-parallel KV writes in one pass) — the streaming analog of
+    OnlineSyncPipeline, with the driver-collect anti-pattern already fixed
+    in the shared code.
     """
-    from mini_feature_store_spark.operators.latest import latest_per_key
+    from mini_feature_store_spark.pipelines.online_sync import write_latest
 
     def sync_batch(batch_df: DataFrame, batch_id: int) -> None:
-        latest = latest_per_key(
-            batch_df, keys=[key_col], order_cols=[order_col], strategy="max_by"
-        )
-        value_cols = [c for c in latest.columns if c != key_col]
-        payloads = latest.select(
-            F.concat(F.lit(key_prefix), F.col(key_col).cast("string")).alias("key"),
-            F.to_json(F.struct(key_col, *value_cols)).alias("payload"),
-        )
-
-        def write_partition(rows):
-            client = kv_factory()
-            client.mset((r["key"], r["payload"]) for r in rows)
-
-        payloads.foreachPartition(write_partition)
+        write_latest(batch_df, kv_factory, key_col, order_col, key_prefix)
 
     writer = (
         windowed.writeStream.outputMode("update")

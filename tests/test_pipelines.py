@@ -212,6 +212,28 @@ def test_online_sync_to_file_kv(spark, tmp_path, events_path):
     assert isinstance(payload["event_count_7d"], int)
 
 
+def test_online_sync_counts_pairs_written_not_mset_result(
+    spark, tmp_path, events_path
+):
+    """The sync's return value is the number of pairs handed to the
+    clients, counted in the write pass — also when ``mset`` returns None."""
+    table = str(tmp_path / "features")
+    run_backfill(spark, BackfillConfig(events_path, table, "2024-01-01", "2024-01-05"))
+    kv_dir = str(tmp_path / "kv")
+
+    def factory():
+        class SilentKV(FileKVStore):
+            def mset(self, pairs):
+                super().mset(pairs)
+
+        return SilentKV(kv_dir)
+
+    n = run_online_sync(
+        spark, OnlineSyncConfig(features_table=table, as_of="2024-01-05"), factory
+    )
+    assert n == len(FileKVStore(kv_dir).keys()) == 2
+
+
 def test_online_sync_cutoff_excludes_stale_users(spark, tmp_path):
     events_path = str(tmp_path / "ev2")
     spark.createDataFrame(
@@ -422,6 +444,207 @@ def test_append_with_schema_evolution(spark, tmp_path):
     assert rows["u2"].f1 is None and rows["u2"].f2 == 0.5
     # version 0 still reads with its original (narrower) schema
     assert set(vt.read(spark, version=0).columns) == {"user_id", "f1"}
+
+
+def _inodes(root) -> dict:
+    """{relative path: inode} of the data files under ``root`` (Spark's
+    ``_SUCCESS`` markers left out)."""
+    import os
+
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            if not n.startswith(("_", "._")):
+                p = os.path.join(d, n)
+                out[os.path.relpath(p, root)] = os.stat(p).st_ino
+    return out
+
+
+def _day_rows(spark, rows):
+    return spark.createDataFrame(rows, "user_id long, day date, v double")
+
+
+def _row_set(df) -> set:
+    return {tuple(r) for r in df.select("user_id", "day", "v").collect()}
+
+
+def test_append_hard_links_previous_version(spark, tmp_path):
+    """Same-schema append: every data file of v=N-1 is linked (same inode)
+    into v=N, the only new inodes are the new rows' files, and the rows
+    are the union — including a row appended into an existing day."""
+    root = tmp_path / "t"
+    vt = VersionedTable(str(root))
+    old = [(1, dt.date(2024, 1, 1), 1.0), (2, dt.date(2024, 1, 2), 2.0)]
+    new = [(3, dt.date(2024, 1, 3), 3.0), (4, dt.date(2024, 1, 2), 4.0)]
+    v0 = vt.write(_day_rows(spark, old), partition_by=["day"])
+    v1 = vt.write(_day_rows(spark, new), partition_by=["day"], mode="append")
+
+    before, after = _inodes(root / f"v={v0}"), _inodes(root / f"v={v1}")
+    assert all(after.get(p) == ino for p, ino in before.items())
+    fresh = {p: ino for p, ino in after.items() if p not in before}
+    assert fresh and not set(fresh.values()) & set(before.values())
+    new_data = [p for p in fresh if p.endswith(".parquet")]
+    assert {p.split("/")[0] for p in new_data} == {
+        "day=2024-01-02", "day=2024-01-03"
+    }
+    assert _row_set(vt.read(spark)) == set(old) | set(new)
+    assert _row_set(vt.read(spark, version=v0)) == set(old)
+
+    # every version is self-contained: dropping v=N-1 leaves v=N whole
+    assert vt.vacuum(keep_last=1) == [v0]
+    assert not (root / f"v={v0}").exists()
+    assert _row_set(vt.read(spark)) == set(old) | set(new)
+
+
+def test_append_copies_when_link_fails(spark, tmp_path, monkeypatch):
+    import os
+
+    def no_link(src, dst):
+        raise OSError("cross-device link")
+
+    root = tmp_path / "t"
+    vt = VersionedTable(str(root))
+    old = [(1, dt.date(2024, 1, 1), 1.0)]
+    new = [(2, dt.date(2024, 1, 2), 2.0)]
+    v0 = vt.write(_day_rows(spark, old), partition_by=["day"])
+    monkeypatch.setattr(os, "link", no_link)
+    v1 = vt.write(_day_rows(spark, new), partition_by=["day"], mode="append")
+    assert _row_set(vt.read(spark)) == set(old) | set(new)
+    before, after = _inodes(root / f"v={v0}"), _inodes(root / f"v={v1}")
+    assert set(before) <= set(after)
+    assert not set(before.values()) & set(after.values())
+
+
+def test_append_rewrites_on_partition_or_type_change(spark, tmp_path):
+    """A different partition spec or column type takes the unionByName
+    rewrite: no file of the previous version is linked."""
+    root = tmp_path / "t"
+    vt = VersionedTable(str(root))
+    old = [(1, dt.date(2024, 1, 1), 1.0)]
+    v0 = vt.write(_day_rows(spark, old), partition_by=["day"])
+
+    v1 = vt.write(
+        _day_rows(spark, [(2, dt.date(2024, 1, 2), 2.0)]), mode="append"
+    )
+    assert vt.versions()[-1]["partition_by"] == []
+    assert not set(_inodes(root / f"v={v0}").values()) & set(
+        _inodes(root / f"v={v1}").values()
+    )
+    assert _row_set(vt.read(spark)) == {
+        (1, dt.date(2024, 1, 1), 1.0), (2, dt.date(2024, 1, 2), 2.0)
+    }
+
+    v2 = vt.write(
+        spark.createDataFrame(
+            [(3, dt.date(2024, 1, 3), 3)], "user_id long, day date, v long"
+        ),
+        mode="append",
+    )
+    assert not set(_inodes(root / f"v={v1}").values()) & set(
+        _inodes(root / f"v={v2}").values()
+    )
+    df = vt.read(spark)
+    assert dict(df.dtypes)["v"] == "double"
+    assert _row_set(df) == {
+        (1, dt.date(2024, 1, 1), 1.0),
+        (2, dt.date(2024, 1, 2), 2.0),
+        (3, dt.date(2024, 1, 3), 3.0),
+    }
+
+    # a version committed without its column list is rewritten once
+    manifest = json.loads((root / "_manifest.json").read_text())
+    del manifest["versions"][-1]["columns"]
+    (root / "_manifest.json").write_text(json.dumps(manifest))
+    v3 = vt.write(_day_rows(spark, [(4, dt.date(2024, 1, 4), 4.0)]), mode="append")
+    assert not set(_inodes(root / f"v={v2}").values()) & set(
+        _inodes(root / f"v={v3}").values()
+    )
+    assert vt.read(spark).count() == 4
+
+
+def test_append_keeps_previous_column_order(spark, tmp_path):
+    root = tmp_path / "t"
+    vt = VersionedTable(str(root))
+    v0 = vt.write(
+        spark.createDataFrame([("u1", 1, 0.5)], "user_id string, a long, b double")
+    )
+    v1 = vt.write(
+        spark.createDataFrame([(0.25, 2, "u2")], "b double, a long, user_id string"),
+        mode="append",
+    )
+    before, after = _inodes(root / f"v={v0}"), _inodes(root / f"v={v1}")
+    assert all(after.get(p) == ino for p, ino in before.items())
+    df = vt.read(spark)
+    assert df.columns == ["user_id", "a", "b"]
+    assert sorted(tuple(r) for r in df.collect()) == [
+        ("u1", 1, 0.5), ("u2", 2, 0.25)
+    ]
+    # both files' own column order matches too
+    for f in (p for p in after if p.endswith(".parquet")):
+        assert spark.read.parquet(str(root / f"v={v1}" / f)).columns == [
+            "user_id", "a", "b"
+        ]
+
+
+def test_write_skips_orphan_version_dir(spark, tmp_path):
+    """A write that died after Spark created v=N but before the manifest
+    commit must not block the table: later writes, appends and deletes
+    number past the orphan, and its rows are never read."""
+    root = tmp_path / "t"
+    vt = VersionedTable(str(root))
+    old = [(1, dt.date(2024, 1, 1), 1.0)]
+    assert vt.write(_day_rows(spark, old), partition_by=["day"]) == 0
+    # the crashed write: data under v=1, no commit
+    _day_rows(spark, [(9, dt.date(2024, 1, 9), 9.0)]).write.partitionBy(
+        "day"
+    ).parquet(str(root / "v=1"))
+    assert [v["version"] for v in vt.versions()] == [0]
+
+    new = [(2, dt.date(2024, 1, 2), 2.0)]
+    assert vt.write(_day_rows(spark, new), partition_by=["day"], mode="append") == 2
+    assert _row_set(vt.read(spark)) == set(old) | set(new)
+    (root / "v=3").mkdir()
+    v4, _ = vt.delete_keys(spark.createDataFrame([(1,)], "user_id long"), ["user_id"])
+    assert v4 == 4
+    assert _row_set(vt.read(spark)) == set(new)
+    assert [v["version"] for v in vt.versions()] == [0, 2, 4]
+
+
+def test_partition_values_reads_directory_names(spark, tmp_path):
+    """partition_values decodes what Spark escaped and maps the null
+    partition to None, without running a Spark job."""
+    values = ["plain", "has space", "a:b", "p%q", "k=v", "ünïcødé", None]
+    vt = VersionedTable(str(tmp_path / "t"))
+    vt.write(
+        spark.createDataFrame([(v, 1) for v in values], "p string, x int"),
+        partition_by=["p"],
+    )
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    got = vt.partition_values()
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    assert sorted(got, key=str) == sorted(values, key=str)
+    flat = VersionedTable(str(tmp_path / "flat"))
+    flat.write(spark.createDataFrame([(1,)], "x int"))
+    with pytest.raises(ValueError):
+        flat.partition_values()
+
+
+def test_incremental_backfill_current_table_runs_no_jobs(
+    spark, tmp_path, events_path
+):
+    """Committed days come from the latest version's directory names: on
+    an already-current table the daily run starts no Spark job at all."""
+    from mini_feature_store_spark.pipelines import run_backfill_incremental
+
+    table = str(tmp_path / "inc")
+    cfg = BackfillConfig(events_path, table, "2024-01-01", "2024-01-05")
+    assert len(run_backfill_incremental(spark, cfg)) == 5
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    assert run_backfill_incremental(spark, cfg) == []
+    after = set(tracker.getJobIdsForGroup(None))
+    assert after == before, f"current table started Spark jobs: {after - before}"
 
 
 def test_compact_reduces_files_and_preserves_rows(spark, tmp_path):
